@@ -81,7 +81,7 @@ object Bench {
       s"""\"$name\":{"min":${s.head},"med":${s(s.size / 2)},"max":${s.last},"n":${s.size}}"""
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","protocol":"min-of-first-3; stats n=5 for top-10","queries":$qs,"errors":$errJson,"stats":$statsJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","protocol":"min-of-first-3; stats n=5 for top-10","queries":$qs,"errors":$errJson,"stats":$statsJson,"sf":${Json.writeValueAsString(sfDir)}}"""
     println(line)
     // stdout gets tail-truncated by capture harnesses once the suite
     // passed ~60 queries; the full per-query timing set lives here so
@@ -93,9 +93,24 @@ object Bench {
     // Emit a compact (<1 KB) final line that survives any tail window:
     // headline total, counts, env, and a pointer to the full per-query
     // stats on disk. Keys mirror the full line where they overlap.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_errors":${errors.size},"cpus":$cpus,"sf":"$sfDir","stats_file":"bench_timings.json"}"""
-    println(compact)
+    println(compactLine(total, results.size, errors.size,
+      sys.env.get("SPARK_GRAFT_CPUS"), spark.sparkContext.defaultParallelism, sfDir))
     spark.stop()
   }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The compact final line. Jackson writes it, so any `sfDir` stays a
+    * valid JSON string. `cpus` is the SPARK_GRAFT_CPUS value when that is
+    * a positive integer, else `fallbackCpus` (the session's parallelism:
+    * the variable may be unset, or `*` for all cores). */
+  private[graft] def compactLine(total: Double, n: Int, nErrors: Int,
+                                 cpus: Option[String], fallbackCpus: Int,
+                                 sfDir: String): String =
+    Json.createObjectNode()
+      .put("metric", "total").put("value", total).put("unit", "sec")
+      .put("n", n).put("n_errors", nErrors)
+      .put("cpus", cpus.flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(fallbackCpus))
+      .put("sf", sfDir).put("stats_file", "bench_timings.json")
+      .toString
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Distributed connected components over an undirected edge list —
   * the step that turns a near-dup PAIR list (qd03/qd04/qd05 output)
@@ -11,9 +11,14 @@ import org.apache.spark.sql.DataFrame
   * Algorithm: iterated min-label propagation. Every vertex starts
   * labeled with its own id; each round it takes the min of its own
   * label and its neighbors' labels; fixpoint = every vertex holds the
-  * min id of its component. Each round is one shuffle join
-  * (edges ⋈ labels on the edge key) plus one per-vertex min
-  * aggregate — no driver-side graph state, vertices never collect.
+  * min id of its component. Round 1 starts from the identity labels,
+  * so it reduces to least(id, min neighbor id) and runs as one
+  * per-vertex aggregation of the edge list. Every later round is one
+  * shuffle join (edges ⋈ labels on the edge key) plus one per-vertex
+  * min aggregate — no driver-side graph state, vertices never collect.
+  * Rounds are counted from that seed round; unless `maxIter` stops the
+  * loop first, the last counted round is the one in which no label
+  * moved.
   *
   * Scale: rounds = O(log diameter) — each round unions in the
   * pointer-doubled labels (comp(comp(v))), halving every vertex's
@@ -23,8 +28,10 @@ import org.apache.spark.sql.DataFrame
   * so the loop typically runs 3-4 rounds regardless of corpus size;
   * the per-round cost is the edge shuffle, which AQE handles like any
   * other key join. The driver loop is over ROUNDS (bounded by
-  * maxIter), not rows; the only driver actions are the per-round
-  * materialize + a LIMIT-1 convergence probe.
+  * maxIter), not rows; the only driver actions are one materialize of
+  * the symmetric edge list and one materialize per round. Each round's
+  * materialize also counts the labels that moved (a `Dataset.observe`
+  * metric on the same job); that count is the convergence test.
   */
 object ConnectedComponents {
 
@@ -77,9 +84,17 @@ object ConnectedComponents {
   private[graft] def runCounted(edges: DataFrame, aCol: String = "a_id",
                                 bCol: String = "b_id",
                                 maxIter: Int = 20): (DataFrame, Int) = {
-    // symmetric closure: propagate minima in both directions per round
-    val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // symmetric closure: propagate minima in both directions per round.
+    // Both orientations come from ONE reference to `edges` (an explode of
+    // the two (src, dst) structs), so the upstream funnel — typically a
+    // post-shuffle verification — is evaluated once, not once per union
+    // branch. Both ids are cast to the type `union` would widen them to.
+    val vt = edges.select(col(aCol)).union(edges.select(col(bCol))).schema.head.dataType
+    val (a, b) = (col(aCol).cast(vt), col(bCol).cast(vt))
+    val sym = edges
+      .select(explode(array(struct(a.as("src"), b.as("dst")),
+        struct(b.as("src"), a.as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
     // localCheckpoint, not persist: persist caches DATA but the logical
     // plan still compounds across rounds (each next references the whole
     // prior lineage), and Catalyst re-analyzes the accumulated plan every
@@ -96,11 +111,20 @@ object ConnectedComponents {
     // instead of once per round is the scale win, and at toy scale it
     // removes one exchange per round.
     val symC = checkpointTruncated(sym.repartition(col("dst")))
-    var labels = checkpointTruncated(
-      symC.select(col("src").as("id")).distinct()
-        .withColumn("comp", col("id")))
-    var iter = 0
-    var converged = false
+    if (maxIter < 1)
+      return (symC.select(col("src").as("id")).distinct().withColumn("comp", col("id")), 0)
+    // round 1 is the seed: against identity labels a round reduces to
+    // least(id, min neighbor id) per vertex — one aggregation over the
+    // edge checkpoint, no identity-label table to materialize first.
+    // `old` is the label the round started from (the id itself).
+    val (seed, seedMoved) = checkpointAny(
+      symC.groupBy(col("src"))
+        .agg(least(col("src"), min(col("dst"))).as("comp"))
+        .select(col("src").as("id"), col("comp"), col("src").as("old")),
+      col("comp") =!= col("old"))
+    var labels = seed.select(col("id"), col("comp"))
+    var iter = 1
+    var converged = !seedMoved
     while (iter < maxIter && !converged) {
       val viaNeighbors = symC
         .join(labels.select(col("id").as("dst"), col("comp")), "dst")
@@ -115,19 +139,41 @@ object ConnectedComponents {
         .join(labels.select(col("id").as("mid"), col("comp")), "mid")
         .select(col("id"), col("comp"),
           lit(null).cast(labels.schema("comp").dataType).as("old"))
-      // r14: the previous label rides through the min-aggregation (every
-      // vertex has exactly one current row, min ignores nulls), so the
-      // convergence probe is a filter over the checkpointed round output
-      // instead of a second join + shuffle per round
-      val next = checkpointTruncated(viaNeighbors
+      // the previous label rides through the min-aggregation (every
+      // vertex has exactly one current row, min ignores nulls), and the
+      // convergence test counts rows whose label moved inside the same
+      // checkpoint job
+      val (next, moved) = checkpointAny(viaNeighbors
         .union(labels.select(col("id"), col("comp"), col("comp").as("old")))
         .union(compressed)
-        .groupBy("id").agg(min("comp").as("comp"), min("old").as("old")))
-      converged = next.filter(col("comp") =!= col("old")).isEmpty
+        .groupBy("id").agg(min("comp").as("comp"), min("old").as("old")),
+        col("comp") =!= col("old"))
+      converged = !moved
       labels = next.select(col("id"), col("comp"))
       iter += 1
     }
-    (labels.select(col("id"), col("comp")), iter)
+    (labels, iter)
+  }
+
+  /** Name of the per-round `observe` metric of [[checkpointAny]]. */
+  private val RoundMetric = "graft_cc_round"
+
+  /** [[checkpointTruncated]] that also answers "does any row satisfy
+    * `pred`?" from the checkpoint's OWN job: a `Dataset.observe` count
+    * rides the materialization, so a loop's convergence test costs no
+    * extra action. The metric is read from the executed plan
+    * (`QueryExecution.observedMetrics`), never awaited, so it cannot
+    * block. When no metric row arrives — Spark may plan the observed
+    * node away, e.g. over an empty relation — one probe over the
+    * checkpoint answers instead. */
+  private def checkpointAny(df: DataFrame, pred: Column): (DataFrame, Boolean) = {
+    val observed = df.observe(RoundMetric, count(when(pred, true)).as("n"))
+    val c = checkpointTruncated(observed)
+    val hit = observed.queryExecution.observedMetrics.get(RoundMetric) match {
+      case Some(row) => row.getLong(0) > 0
+      case None => !c.filter(pred).isEmpty
+    }
+    (c, hit)
   }
 
   /** Alternating large-star/small-star connected components (Kiveris
@@ -155,7 +201,8 @@ object ConnectedComponents {
     * Each round localCheckpoints (same O(2^rounds) re-analysis hazard
     * as [[run]]); convergence = the star edge set reaches a fixpoint,
     * tested by membership flags riding through smallStar's own (u, v)
-    * aggregation (exact set equality, no extra per-round job).
+    * aggregation (exact set equality) and counted by an `observe`
+    * metric on the round's checkpoint job (no extra per-round job).
     */
   def runAlternating(edges: DataFrame, aCol: String = "a_id",
                      bCol: String = "b_id", maxIter: Int = 30): DataFrame =
@@ -194,7 +241,8 @@ object ConnectedComponents {
     // the old count-equality + exceptAll pair computed with 2 extra
     // exchanges and 2 extra actions per round). smallStar's re-keying is
     // immaterial: the probe compares SETS after the aggregation, not
-    // per-group lineage.
+    // per-group lineage. The flag mismatches are counted on the round's
+    // checkpoint job ([[checkpointAny]]), so no probe job follows it.
     def smallStarProbed(cur: DataFrame, prev: DataFrame): DataFrame = {
       val down = cur.select(
         greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
@@ -213,8 +261,9 @@ object ConnectedComponents {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val probed = checkpointTruncated(smallStarProbed(largeStar(e), e))
-      converged = probed.filter(col("is_new") =!= col("is_old")).isEmpty
+      val (probed, changed) = checkpointAny(smallStarProbed(largeStar(e), e),
+        col("is_new") =!= col("is_old"))
+      converged = !changed
       e = probed.filter(col("is_new")).select(col("u"), col("v"))
       iter += 1
     }

@@ -97,13 +97,15 @@ object GitCloneSource {
     CloneResult(task.repo_id, task.repo_name, null, attempt, lastError)
   }
 
-  /** distributed clone fan-out; `workDir` must be reachable from the
-    * executors (local dir in local mode, shared/scratch volume on a
-    * cluster) */
+  /** distributed clone fan-out, spread over the session's cores
+    * whatever the listing's partitioning; `workDir` must be reachable
+    * from the executors (local dir in local mode, shared/scratch volume
+    * on a cluster) */
   def cloneAll(tasks: Dataset[CloneTask], workDir: String,
                maxAttempts: Int = 3, timeoutSec: Long = 600): Dataset[CloneResult] = {
     import tasks.sparkSession.implicits._
-    tasks.mapPartitions(_.map(cloneOne(_, workDir, maxAttempts, timeoutSec)))
+    GitHistorySource.spread(tasks)
+      .mapPartitions(_.map(cloneOne(_, workDir, maxAttempts, timeoutSec)))
   }
 
   /** successful clones as [[GitHistorySource]] inputs */

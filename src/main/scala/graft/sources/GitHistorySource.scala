@@ -49,7 +49,8 @@ import scala.sys.process._
   * Scale: one task = a batch of repos; each subprocess streams text
   * that is parsed incrementally — no whole-history buffering. Skew
   * (mega-repos) is handled by the same threshold-skip the reference
-  * uses, plus repartitioning the repo list.
+  * uses, plus spreading the repo list over the session's cores
+  * ([[spread]]).
   */
 object GitHistorySource {
 
@@ -387,10 +388,18 @@ object GitHistorySource {
     }
   }
 
+  /** Spread a one-row-per-repo list over the session's default
+    * parallelism. Each repo costs a subprocess that cannot be split, and
+    * a listing written as one file would otherwise clone or walk every
+    * repo inside a single task. The count is explicit, so AQE does not
+    * coalesce the tiny list back into one partition. */
+  private[sources] def spread[T](repos: Dataset[T]): Dataset[T] =
+    repos.repartition(repos.sparkSession.sparkContext.defaultParallelism)
+
   /** Distributed commit walk over a repo list. */
   def commits(repos: Dataset[RepoRef]): Dataset[GitCommit] = {
     import repos.sparkSession.implicits._
-    repos.flatMap(walkCommits _)
+    spread(repos).flatMap(walkCommits _)
   }
 
   /** Distributed per-commit file-delta walk (the `deltasRaw` feed of
@@ -400,7 +409,7 @@ object GitHistorySource {
   def deltas(repos: Dataset[RepoRef], withContent: Boolean = false,
              nlocMode: Nloc.NlocMode = Nloc.NlocMode.Superset): Dataset[GitDelta] = {
     import repos.sparkSession.implicits._
-    repos.flatMap(walkDeltas(_, withContent, nlocMode))
+    spread(repos).flatMap(walkDeltas(_, withContent, nlocMode))
   }
 
   /** `commits` silver shape with proper timestamp + tz-offset split

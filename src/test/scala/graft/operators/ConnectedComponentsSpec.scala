@@ -16,6 +16,62 @@ class ConnectedComponentsSpec extends SparkTestBase {
                       10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
+  test("empty, self-loop-only and single-edge graphs return promptly with exact labels") {
+    // the convergence count rides each round's checkpoint job as an
+    // observed metric; over an empty relation Spark may plan that node
+    // away, and the loop must then answer without a metric row
+    def bounded[T](body: => T): T = {
+      val f = scala.concurrent.Future(body)(scala.concurrent.ExecutionContext.global)
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(120, "s"))
+    }
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.as[(Long, Long)].collect().toMap
+    val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    val prunedEmpty = Seq((1L, 2L)).toDF("a_id", "b_id").filter(lit(false))
+    val selfLoops = Seq((20L, 20L), (21L, 21L)).toDF("a_id", "b_id")
+    val single = Seq((7L, 3L)).toDF("a_id", "b_id")
+    val cases = Seq(
+      (empty, Map.empty[Long, Long], 1),
+      (prunedEmpty, Map.empty[Long, Long], 1),
+      (selfLoops, Map(20L -> 20L, 21L -> 21L), 1),
+      (single, Map(3L -> 3L, 7L -> 3L), 2))
+    cases.foreach { case (edges, want, wantRounds) =>
+      val (got, rounds) = bounded {
+        val (l, r) = ConnectedComponents.runCounted(edges)
+        (labels(l), r)
+      }
+      assert(got == want)
+      assert(rounds == wantRounds, s"$want took $rounds rounds")
+      val alt = bounded(labels(ConnectedComponents.runAlternating(edges)))
+      assert(alt == want)
+    }
+  }
+
+  test("run issues at most 17 Spark jobs on the chain + pair + self-loop fixture") {
+    // 27 before the edge list was built from one scan, the seed round
+    // folded into one aggregation of it, and the convergence test moved
+    // onto each round's own checkpoint job
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 20L))
+      .toDF("a_id", "b_id")
+    val sc = spark.sparkContext
+    val group = "cc-job-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "ConnectedComponents.run job count")
+      try ConnectedComponents.run(edges) finally sc.clearJobGroup()
+      // drain the listener bus before reading the count
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 17, s"run issued ${jobs.get} jobs")
+  }
+
   test("long chain converges within its diameter and survives a shuffle") {
     // path 0-1-...-9: worst case for min propagation (diameter 9)
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")

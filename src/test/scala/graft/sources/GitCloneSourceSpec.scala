@@ -94,4 +94,47 @@ class GitCloneSourceSpec extends SparkTestBase {
       org.apache.commons.io.FileUtils.deleteDirectory(new File(work))
     }
   }
+
+  test("a one-partition listing clones and walks on several tasks with identical rows") {
+    import org.apache.spark.sql.functions.spark_partition_id
+    val srcs = (0 until 5).map(_ => sourceRepo())
+    val work = Files.createTempDirectory("graft-clone-work4").toString
+    try {
+      val tasks = srcs.zipWithIndex.map { case (src, i) =>
+        CloneTask(s"models/o/r$i", s"o/r$i", s"file://${src.getAbsolutePath}")
+      }.toDS().coalesce(1)
+      assert(tasks.rdd.getNumPartitions == 1)
+      // spark_partition_id in the same stage as the subprocess = the task
+      // that ran it
+      def taskCount(df: org.apache.spark.sql.DataFrame): Int =
+        df.select(spark_partition_id()).distinct().count().toInt
+
+      val cloned = GitCloneSource.cloneAll(tasks, work)
+      val byId = cloned.collect().map(r => r.repo_id -> r).toMap
+      assert(byId.keySet == srcs.indices.map(i => s"models/o/r$i").toSet)
+      byId.values.foreach { r =>
+        assert(r.error == null && r.attempts == 1, s"$r")
+        assert(r.path == new File(work, GitCloneSource.dirNameFor(r.repo_id)).getAbsolutePath)
+      }
+      // the re-run reuses the clones, on the same spread
+      assert(taskCount(cloned.toDF()) > 1, "every clone ran in one task")
+
+      val refs = GitCloneSource.refs(
+        byId.values.toSeq.sortBy(_.repo_id).toDS().coalesce(1))
+      val local = refs.collect().toSeq
+      val commits = GitHistorySource.commits(refs)
+      val deltas = GitHistorySource.deltas(refs)
+      assert(taskCount(commits.toDF()) > 1 && taskCount(deltas.toDF()) > 1,
+        "every walk ran in one task")
+      assert(commits.collect().toSeq.sortBy(_.toString) ==
+        local.flatMap(GitHistorySource.walkCommits).sortBy(_.toString))
+      assert(deltas.collect().toSeq.sortBy(_.toString) ==
+        local.flatMap(GitHistorySource.walkDeltas(_, withContent = false,
+          Nloc.NlocMode.Superset)).sortBy(_.toString))
+      assert(commits.count() == 10)
+    } finally {
+      srcs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(work))
+    }
+  }
 }
